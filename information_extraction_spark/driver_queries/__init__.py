@@ -716,8 +716,8 @@ _CHANGED_THIS_ROUND = [
     # running through the pipeline is listed first.
     "kg_extract_triples",
     "kg_spo_lists",
-    # classify_batch now collapses duplicate texts before the Arrow
-    # presence matrix — kg_classify exercises that path directly.
+    # classify_batch collapses duplicate texts before the presence
+    # pass — kg_classify exercises that path directly.
     "kg_classify",
     "a1_alias_eval",
     "st_extract_triples",

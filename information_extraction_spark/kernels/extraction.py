@@ -20,6 +20,8 @@ import hashlib
 import re
 from collections.abc import Iterable, Mapping
 
+import numpy as np
+
 # ---------------------------------------------------------------------------
 # Substring search
 # ---------------------------------------------------------------------------
@@ -244,16 +246,65 @@ def decode_bio_tokens(
 # Indexed knowledge base (fast path for the batch kernels)
 # ---------------------------------------------------------------------------
 
+# Polynomial hash of a code-point string, mod 2**64 (numpy uint64
+# arithmetic wraps): h(s) = sum_j s[j] * _MUL**j. The multiplier is odd,
+# hence invertible mod 2**64, so the hash of any window of a text is the
+# difference of two prefix sums times one inverse power.
+_MUL = 0x9E3779B97F4A7C15
+_MUL_INV = pow(_MUL, -1, 1 << 64)
+
+
+# Batch kernels probe at most this many texts at once: the touched-pair
+# arrays grow with texts × pairs touched per text, and slicing keeps a
+# 10k-row Arrow batch from holding them all (~150 MB at 10k rows of the
+# sf0.1 corpus against the 600-entry KB).
+_SLICE_TEXTS = 128
+
+
+def _code_points(strings: list[str]) -> np.ndarray:
+    """Code points of the concatenated ``strings`` as one uint32 array."""
+    return np.frombuffer(
+        "".join(strings).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+    )
+
+
+def _powers(base: int, n: int) -> np.ndarray:
+    """``base**k mod 2**64`` for k in [0, n)."""
+    out = np.full(n, base, dtype=np.uint64)
+    out[:1] = 1
+    return np.cumprod(out)
+
+
+def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenation of ``arange(s, s + c)`` over ``zip(starts, counts)``."""
+    shift = np.repeat(starts - (np.cumsum(counts) - counts), counts)
+    return shift + np.arange(len(shift))
+
 
 class KnowledgeBase:
-    """Entity-prefiltered view of the (predicate, subject, object) KB.
+    """Indexed view of the (predicate, subject, object) KB.
 
     Semantically identical to :func:`classify_predicates` over the same
-    entries, but O(|entities|) per sentence instead of O(|KB|): one
-    lowercase-substring pass finds which entities occur, then pair
-    membership is a set lookup. This is what the Arrow-batched Spark
-    kernels and the golden generator use; tests assert parity with the
-    direct implementation.
+    entries (tests assert parity with the direct implementation). This
+    is what the Arrow-batched Spark kernels and the golden generator
+    use, and every method goes through one index built here:
+
+    * the distinct entities lowered with ``str.lower``, bucketed by
+      length; each bucket holds the sorted polynomial hashes of its
+      entities and their code points;
+    * the KB pairs numbered in (predicate, pair index) order, with the
+      lowered entity id of each side;
+    * a CSR map from lowered entity to the pairs it is a side of.
+
+    Presence hashes every window of the lowered text once per distinct
+    entity length, looks the hashes up with ``searchsorted`` and
+    confirms each hit with an exact code-point compare, so a hash
+    collision never makes an entity present. Each (text, entity) hit
+    then expands through the CSR map: a pair fires when both its sides
+    are hits, and only pairs with at least one side present are visited
+    for tagging. Cost per batch: O(text chars × distinct entity lengths)
+    to probe plus O(hits × entity degree) to fire — independent of the
+    number of KB entities that do not occur.
     """
 
     def __init__(self, entries: Iterable[tuple[str, str, str]]):
@@ -267,16 +318,66 @@ class KnowledgeBase:
             seen.add(key)
             self.by_predicate.setdefault(predicate, []).append((subject, obj))
         self.predicates = sorted(self.by_predicate)
-        entity_set = {
-            e for pairs in self.by_predicate.values() for p in pairs for e in p
-        }
-        # Longest-first so prefilter cost is stable; lowercase once.
-        self.entities = sorted(entity_set)
-        self._entities_lower = [(e, e.lower()) for e in self.entities]
-        self._pair_keys: dict[str, list[tuple[str, str]]] = {
-            pred: [(s.lower(), o.lower()) for s, o in pairs]
-            for pred, pairs in self.by_predicate.items()
-        }
+        self._pred_index = {p: k for k, p in enumerate(self.predicates)}
+        # Pairs in (predicate, pair index) order: the tag overwrite order.
+        sizes = [len(self.by_predicate[p]) for p in self.predicates]
+        self._pairs = [pr for p in self.predicates for pr in self.by_predicate[p]]
+        self._lowered = sorted({e.lower() for pair in self._pairs for e in pair})
+        lid = {el: k for k, el in enumerate(self._lowered)}
+        self._pred_start = np.concatenate(([0], np.cumsum(sizes, dtype=np.int64)))
+        self._pair_pred = np.repeat(np.arange(len(sizes), dtype=np.int64), sizes)
+        n_pairs = len(self._pairs)
+        s_id = np.fromiter(
+            (lid[s.lower()] for s, _ in self._pairs), np.int64, n_pairs
+        )
+        o_id = np.fromiter(
+            (lid[o.lower()] for _, o in self._pairs), np.int64, n_pairs
+        )
+
+        # CSR entity -> (pair, side); side bit 1 = subject, 2 = object.
+        same = s_id == o_id
+        ent = np.concatenate((s_id, o_id[~same]))
+        pair = np.concatenate((np.arange(n_pairs), np.flatnonzero(~same)))
+        side = np.concatenate(
+            (np.where(same, 3, 1), np.full(len(ent) - n_pairs, 2))
+        )
+        order = np.lexsort((pair, ent))
+        self._csr_pair = pair[order]
+        self._csr_side = side[order].astype(np.uint8)
+        self._csr_ptr = np.concatenate(
+            ([0], np.cumsum(np.bincount(ent, minlength=len(self._lowered))))
+        )
+
+        # Length buckets: (length, filter shift, filter, sorted hashes,
+        # entity ids, code points), in increasing length.
+        lengths = np.array([len(e) for e in self._lowered], dtype=np.int64)
+        codes = _code_points(self._lowered)
+        offsets = np.cumsum(lengths) - lengths
+        self._mul_pow = _powers(_MUL, max(1 << 12, lengths.max(initial=0) + 1))
+        self._inv_pow = _powers(_MUL_INV, len(self._mul_pow))
+        # "" occurs in every text (as ``"" in low`` says) but tags nothing.
+        self._empty_id = lid.get("")
+        self._buckets: list[tuple] = []
+        by_len = np.argsort(lengths, kind="stable")
+        sorted_len = lengths[by_len]
+        for length in np.unique(sorted_len[sorted_len > 0]).tolist():
+            ids = by_len[np.searchsorted(sorted_len, length, "left"):
+                         np.searchsorted(sorted_len, length, "right")]
+            ent_codes = codes[offsets[ids][:, None] + np.arange(length)]
+            hashes = (ent_codes * self._mul_pow[:length]).sum(
+                axis=1, dtype=np.uint64
+            )
+            order = np.argsort(hashes, kind="stable")
+            # Membership filter on the hash's top bits, ~8 slots per
+            # entity: most windows are rejected by one byte load before
+            # the binary search.
+            shift = np.uint64(64 - min(24, max(10, (8 * len(ids)).bit_length())))
+            bits = np.zeros(1 << (64 - int(shift)), dtype=bool)
+            bits[hashes >> shift] = True
+            self._buckets.append(
+                (length, shift, bits, hashes[order], ids[order], ent_codes[order])
+            )
+
         # Fallback top-k is a pure function of (text, k); corpora are
         # duplicate-heavy (and the bench replicates its corpus), so
         # memoize per KB instance. Bounded: cleared when oversized.
@@ -302,25 +403,106 @@ class KnowledgeBase:
             self._fallback_cache[key] = hit
         return hit
 
+    def _hits(self, lows: list[str]) -> tuple[np.ndarray, np.ndarray]:
+        """Presence over lowered texts as sorted, distinct (text index,
+        lowered entity id) pairs: entity ``e`` occurs in text ``t``."""
+        n = len(lows)
+        ends = np.cumsum(np.fromiter(map(len, lows), np.int64, n))
+        codes = _code_points(lows)
+        total = len(codes)
+        if total >= len(self._mul_pow):
+            self._mul_pow = _powers(_MUL, 2 * total + 1)
+            self._inv_pow = _powers(_MUL_INV, len(self._mul_pow))
+        prefix = np.zeros(total + 1, dtype=np.uint64)
+        np.cumsum(codes * self._mul_pow[:total], out=prefix[1:])
+        tids, eids = [], []
+        if self._empty_id is not None:
+            tids.append(np.arange(n))
+            eids.append(np.full(n, self._empty_id))
+        for length, shift, bits, hashes, ids, ent_codes in self._buckets:
+            if length > total:
+                break
+            win = prefix[length:] - prefix[:-length]
+            win *= self._inv_pow[: total + 1 - length]
+            pos = np.flatnonzero(bits[win >> shift])
+            win = win[pos]
+            lo = np.searchsorted(hashes, win)
+            np.minimum(lo, len(hashes) - 1, out=lo)
+            found = hashes[lo] == win
+            pos, win, lo = pos[found], win[found], lo[found]
+            # Drop windows that run past the end of their text.
+            t = np.searchsorted(ends, pos, side="right")
+            inside = pos + length <= ends[t]
+            pos, win, lo, t = pos[inside], win[inside], lo[inside], t[inside]
+            # Entities with equal hashes sit side by side in the bucket.
+            count = np.searchsorted(hashes, win, side="right") - lo
+            if (count > 1).any():
+                lo = _ranges(lo, count)
+                pos, t = np.repeat(pos, count), np.repeat(t, count)
+            window = codes[pos[:, None] + np.arange(length)]
+            exact = (window == ent_codes[lo]).all(axis=1)
+            tids.append(t[exact])
+            eids.append(ids[lo[exact]])
+        if not tids:
+            return np.zeros(0, np.int64), np.zeros(0, np.int64)
+        n_ent = len(self._lowered)
+        key = np.unique(np.concatenate(tids) * n_ent + np.concatenate(eids))
+        return np.divmod(key, n_ent)
+
+    def _presence_and_fired(
+        self, texts: list[str]
+    ) -> tuple[tuple[np.ndarray, np.ndarray, np.ndarray], list[list[int]]]:
+        """Batch presence, pair touching and predicate firing, shared by
+        every method so the per-text and batch paths cannot drift.
+
+        Probes the lowered texts against the length buckets (O(text
+        chars × distinct entity lengths)), then expands each (text,
+        entity) hit through the entity -> pair CSR map (O(hits × entity
+        degree)); no work is done per absent entity. Returns
+        ``((text, pair, sides), fired)``: the touched pairs — at least
+        one side present — as arrays sorted by (text, pair id) with the
+        present sides as bits (1 subject, 2 object), and per text the
+        sorted indices of its fired predicates (some pair with both
+        sides present)."""
+        n = len(texts)
+        fired: list[list[int]] = [[] for _ in range(n)]
+        tid, eid = self._hits([t.lower() for t in texts])
+        n_pairs = len(self._pairs)
+        if not n_pairs:
+            none = np.zeros(0, np.int64)
+            return (none, none, none), fired
+        start = self._csr_ptr[eid]
+        degree = self._csr_ptr[eid + 1] - start
+        k = _ranges(start, degree)
+        # (text, pair, side) packed into one sortable int64.
+        key = np.repeat(tid, degree) * n_pairs + self._csr_pair[k]
+        key = np.sort(key * 4 + self._csr_side[k])
+        key, side = np.divmod(key, 4)
+        first = np.flatnonzero(np.diff(key, prepend=-1))
+        sides = np.bitwise_or.reduceat(side, first)
+        tid, pair = np.divmod(key[first], n_pairs)
+        both = sides == 3
+        n_pred = len(self.predicates)
+        fired_key = np.unique(tid[both] * n_pred + self._pair_pred[pair[both]])
+        for t, p in zip(*(a.tolist() for a in np.divmod(fired_key, n_pred))):
+            fired[t].append(p)
+        return (tid, pair, sides), fired
+
     def entities_present(self, text: str) -> set[str]:
         """Lowercased entities occurring (case-insensitively) in text."""
-        low = text.lower()
-        return {el for _, el in self._entities_lower if el in low}
+        _, eid = self._hits([text.lower()])
+        return {self._lowered[e] for e in eid.tolist()}
 
     def classify(
         self, text: str, threshold: float = 0.5, fallback_k: int = 10
     ) -> tuple[list[str], list[float]]:
         """Same contract as :func:`classify_predicates` (threshold-0.5
-        prediction + top-k fallback) via the entity prefilter."""
-        present = self.entities_present(text)
-        scored: list[tuple[str, float]] = []
-        for predicate in self.predicates:
-            hit = any(
-                s in present and o in present
-                for s, o in self._pair_keys[predicate]
-            )
-            score = 1.0 if hit else _pseudo_score(text, predicate)
-            scored.append((predicate, score))
+        prediction + top-k fallback) via the entity index."""
+        fired = set(self._presence_and_fired([text])[1][0])
+        scored = [
+            (p, 1.0 if k in fired else _pseudo_score(text, p))
+            for k, p in enumerate(self.predicates)
+        ]
         scored.sort(key=lambda kv: (-kv[1], kv[0]))
         above = [(p, s) for p, s in scored if s > threshold]
         if not above:
@@ -330,63 +512,55 @@ class KnowledgeBase:
     def pairs_for(self, predicate: str) -> list[tuple[str, str]]:
         return self.by_predicate.get(predicate, [])
 
+    def _span_writes(
+        self,
+        text: str,
+        touched: Iterable[tuple[int, int]],
+        offs: dict[str, list[int]],
+    ) -> list[tuple[int, int, str]]:
+        """BIESO span writes (start, length, kind) of the ``touched``
+        (pair id, present sides) of one predicate, in pair order — the
+        overwrite order of the shared tag array. ``offs`` memoizes match
+        offsets per entity across a text's predicates."""
+        writes: list[tuple[int, int, str]] = []
+        for g, sides in touched:
+            subject, obj = self._pairs[g]
+            if sides & 1:
+                s_offsets = offs.get(subject)
+                if s_offsets is None:
+                    s_offsets = offs[subject] = find_occurrences(subject, text)
+            else:
+                s_offsets = []
+            if subject == obj:
+                o_offsets = s_offsets[1::2]
+            elif sides & 2:
+                o_offsets = offs.get(obj)
+                if o_offsets is None:
+                    o_offsets = offs[obj] = find_occurrences(obj, text)
+            else:
+                o_offsets = []
+            s_len, o_len = len(subject), len(obj)
+            for off in s_offsets:
+                writes.append((off, s_len, "SUB"))
+            for off in o_offsets:
+                writes.append((off, o_len, "OBJ"))
+        return writes
+
     def bieso_tags_fast(self, text: str, predicate: str) -> list[str]:
         """Semantically identical to
-        ``bieso_tags(text, self.pairs_for(predicate))`` (parity-tested)
-        but prefilters each pair with a C-speed lowercase substring
-        check before running the regex scans — most pairs of a fired
-        predicate match nothing and skip both finditer calls."""
+        ``bieso_tags(text, self.pairs_for(predicate))`` (parity-tested),
+        but runs the regex scans only for the pair sides the index
+        finds present."""
         tags = ["O"] * len(text)
-        pairs = self.by_predicate.get(predicate)
-        if not pairs:
+        k = self._pred_index.get(predicate)
+        if k is None:
             return tags
-        low = text.lower()
-        for (subject, obj), (sl, ol) in zip(pairs, self._pair_keys[predicate]):
-            s_in = sl in low
-            o_in = ol in low
-            if not s_in and not o_in:
-                continue
-            s_offsets = find_occurrences(subject, text) if s_in else []
-            if subject == obj:
-                o_offsets = [
-                    off for i, off in enumerate(s_offsets) if i % 2 == 1
-                ]
-            else:
-                o_offsets = find_occurrences(obj, text) if o_in else []
-            for off in s_offsets:
-                _mark_span(tags, off, len(subject), "SUB")
-            for off in o_offsets:
-                _mark_span(tags, off, len(obj), "OBJ")
+        (_, pair, sides), _ = self._presence_and_fired([text])
+        lo, hi = np.searchsorted(pair, self._pred_start[k : k + 2])
+        touched = zip(pair[lo:hi].tolist(), sides[lo:hi].tolist())
+        for start, length, kind in self._span_writes(text, touched, {}):
+            _mark_span(tags, start, length, kind)
         return tags
-
-    def _presence_and_fired(self, texts):
-        """Batch entity-presence matrix (Arrow's C++ substring kernel
-        over the lowered batch) and per-row fired predicates (those
-        with some pair fully present). Shared by :meth:`classify_batch`
-        and :meth:`extract_batch` so the staged and fused paths cannot
-        drift. Returns (texts_list, present, fired)."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        arr = pa.array(list(texts), type=pa.string())
-        low = pc.utf8_lower(arr)
-        n = len(arr)
-        present: dict[str, "np.ndarray"] = {}
-        for _, el in self._entities_lower:
-            mask = pc.match_substring(low, el).to_numpy(zero_copy_only=False)
-            present[el] = np.nan_to_num(mask).astype(bool)
-        fired: list[list[str]] = [[] for _ in range(n)]
-        for predicate in self.predicates:
-            acc = None
-            for s, o in self._pair_keys[predicate]:
-                m = present[s] & present[o]
-                acc = m if acc is None else acc | m
-            if acc is None:
-                continue
-            for i in np.flatnonzero(acc):
-                fired[i].append(predicate)
-        return arr.to_pylist(), present, fired
 
     def extract_batch(
         self,
@@ -417,10 +591,11 @@ class KnowledgeBase:
         are tagged too, not skipped.
 
         Fusion wins over classify_stage → explode → tag_decode_stage:
-        one Arrow round-trip instead of two, the batch presence matrix
-        is reused for pair prefiltering instead of per-row substring
-        scans, and entity match offsets are memoized per text across
-        all its predicates (KB entities recur across pairs).
+        one Arrow round-trip instead of two, the batch presence pass
+        also selects the pairs to tag (only pairs of a chosen predicate
+        with a side present are visited), and entity match offsets are
+        memoized per text across all its predicates (KB entities recur
+        across pairs).
 
         Duplicate texts are deduped BEFORE the presence pass and their
         units served from a bounded per-KB memo (same rationale as the
@@ -428,7 +603,7 @@ class KnowledgeBase:
         the engine ships five dedup operators — and the kernel output
         is a pure function of (text, fallback_k)). On an all-unique
         batch the cost is one dict probe per row; on a corpus with
-        duplication factor d the presence matrix and span work shrink
+        duplication factor d the presence pass and span work shrink
         by ~d. Results are shared references; callers must not mutate.
         """
         texts_list = [t if isinstance(t, str) else (t or "") for t in texts]
@@ -450,12 +625,12 @@ class KnowledgeBase:
                 todo_seen.add(t)
                 todo.append(t)
         if todo:
-            computed = list(
-                zip(
-                    todo,
-                    self._extract_unique(todo, fallback_k, min_entity_len),
+            computed: list[tuple[str, list]] = []
+            for lo in range(0, len(todo), _SLICE_TEXTS):
+                part = todo[lo : lo + _SLICE_TEXTS]
+                computed += zip(
+                    part, self._extract_unique(part, fallback_k, min_entity_len)
                 )
-            )
             if len(cache) > 50_000:
                 cache.clear()
             for t, units in computed:
@@ -470,54 +645,35 @@ class KnowledgeBase:
         min_entity_len: int | None = None,
     ) -> list[list[tuple[str, list[str], list[str]]]]:
         """extract_batch body over known-unique texts (no memo)."""
-        _, present, fired = self._presence_and_fired(texts_list)
-        n = len(texts_list)
+        (tid, pair, sides), fired = self._presence_and_fired(texts_list)
+        # Units to tag per text: the fired predicates (predicate order),
+        # else the fallback top-k (fallback order).
+        chosen = [
+            f or [self._pred_index[p] for p in self._fallback(text, fallback_k)[0]]
+            for text, f in zip(texts_list, fired)
+        ]
+        # Keep the touched pairs of chosen units only; each run of equal
+        # unit keys is one unit's pairs, in pair order.
+        n_pred = len(self.predicates)
+        unit = tid * n_pred + self._pair_pred[pair]
+        wanted = np.fromiter(
+            (i * n_pred + p for i, ps in enumerate(chosen) for p in ps), np.int64
+        )
+        keep = np.isin(unit, wanted)
+        unit, pairs, sides = unit[keep], pair[keep].tolist(), sides[keep].tolist()
+        first = np.flatnonzero(np.diff(unit, prepend=-1))
+        bounds = first.tolist() + [len(unit)]
+        runs = dict(zip(unit[first].tolist(), zip(bounds, bounds[1:])))
         out: list[list[tuple[str, list[str], list[str]]]] = []
-        for i in range(n):
-            text = texts_list[i] or ""
-            preds = fired[i]
-            if not preds:
-                preds = self._fallback(text, fallback_k)[0]
+        for i, text in enumerate(texts_list):
             offs: dict[str, list[int]] = {}
             per_text: list[tuple[str, list[str], list[str]]] = []
-            for predicate in preds:
-                pairs = self.by_predicate.get(predicate, [])
-                keys = self._pair_keys[predicate]
-                # Span writes in pair order (the overwrite order of the
-                # shared tag array).
-                writes: list[tuple[int, int, str]] = []
-                for (subject, obj), (sl, ol) in zip(pairs, keys):
-                    s_in = present[sl][i]
-                    o_in = present[ol][i]
-                    if not s_in and not o_in:
-                        continue
-                    if s_in:
-                        s_offsets = offs.get(subject)
-                        if s_offsets is None:
-                            s_offsets = offs[subject] = find_occurrences(
-                                subject, text
-                            )
-                    else:
-                        s_offsets = []
-                    if subject == obj:
-                        o_offsets = [
-                            off
-                            for k, off in enumerate(s_offsets)
-                            if k % 2 == 1
-                        ]
-                    elif o_in:
-                        o_offsets = offs.get(obj)
-                        if o_offsets is None:
-                            o_offsets = offs[obj] = find_occurrences(
-                                obj, text
-                            )
-                    else:
-                        o_offsets = []
-                    s_len, o_len = len(subject), len(obj)
-                    for off in s_offsets:
-                        writes.append((off, s_len, "SUB"))
-                    for off in o_offsets:
-                        writes.append((off, o_len, "OBJ"))
+            for p in chosen[i]:
+                run = runs.get(i * n_pred + p)
+                if run is None:
+                    continue
+                a, b = run
+                writes = self._span_writes(text, zip(pairs[a:b], sides[a:b]), offs)
                 if not writes:
                     continue
                 # Fast path: when the DISTINCT spans are pairwise
@@ -549,7 +705,7 @@ class KnowledgeBase:
                         subjects, objects, min_len=min_entity_len
                     )
                 if subjects and objects:
-                    per_text.append((predicate, subjects, objects))
+                    per_text.append((self.predicates[p], subjects, objects))
             out.append(per_text)
         return out
 
@@ -561,29 +717,28 @@ class KnowledgeBase:
     ) -> tuple[list[list[str]], list[list[float]]]:
         """Vectorized :meth:`classify` over a batch of texts.
 
-        Entity presence is computed with Arrow's C++ substring kernel
-        over the whole lowered batch (one pass per entity instead of a
-        Python loop per row), predicate firing is boolean algebra over
-        the presence matrix, and only fallback rows (nothing fired)
-        drop back to the per-row pseudo-score path. Output is
+        Presence and predicate firing run batch-wide on the entity index
+        (see :meth:`_presence_and_fired`); only fallback rows (nothing
+        fired) drop back to the per-row pseudo-score path. Output is
         element-wise identical to :meth:`classify` (parity-tested).
 
         Duplicate texts are collapsed before the presence pass (same
         rationale as :meth:`extract_batch`'s memo: the result is a
         pure function of the text, and web corpora are
-        duplicate-heavy) — the matrix and firing algebra run over
-        DISTINCT texts only. Returned lists are shared references for
+        duplicate-heavy). Returned lists are shared references for
         duplicate rows; callers must not mutate.
         """
         texts_list = [t if isinstance(t, str) else (t or "") for t in texts]
         uniq = list(dict.fromkeys(texts_list))
-        _, _, fired = self._presence_and_fired(uniq)
+        fired: list[list[int]] = []
+        for lo in range(0, len(uniq), _SLICE_TEXTS):
+            fired += self._presence_and_fired(uniq[lo : lo + _SLICE_TEXTS])[1]
         per_text: dict[str, tuple[list[str], list[float]]] = {}
         for t, f in zip(uniq, fired):
-            # self.predicates is sorted, so fired lists are already in
+            # Fired indices are sorted, so the names are already in
             # (-score, predicate) order (all scores 1.0).
             if f:
-                per_text[t] = (f, [1.0] * len(f))
+                per_text[t] = ([self.predicates[p] for p in f], [1.0] * len(f))
             else:
                 per_text[t] = self._fallback(t, fallback_k)
         preds_out = [per_text[t][0] for t in texts_list]

@@ -60,7 +60,11 @@ def broadcast_kb(spark, kb_df: DataFrame):
     """Collect the (predicate, subject, object) KB to the driver and
     broadcast it. The KB is a dimension (model-weight analog), not a
     fact table — at 100 TB the facts are the transcripts; a KB of even
-    10^7 entries broadcasts fine (~hundreds of MB)."""
+    10^7 entries broadcasts fine (~hundreds of MB). Each Python worker
+    then builds the KnowledgeBase index once, in memory linear in the KB;
+    kernel time per batch depends on the text length, the number of
+    distinct entity lengths and the entities that occur, not on the
+    number of entries."""
     entries = [
         (r["predicate"], r["subject"], r["object"])
         for r in kb_df.select("predicate", "subject", "object").collect()

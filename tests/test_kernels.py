@@ -168,8 +168,8 @@ def test_reference_extract_end_to_end():
 
 
 def test_classify_batch_parity_with_loop():
-    """Vectorized Arrow-compute classification must equal the per-row
-    path element-wise, including fallback rows and empty strings."""
+    """Batch classification must equal the per-row path element-wise,
+    including fallback rows and empty strings."""
     entries = [
         ("主演", "端脑", "朱元冰"),
         ("主演", "端脑", "蒋依依"),
@@ -212,3 +212,84 @@ def test_bieso_tags_fast_parity():
             assert kbase.bieso_tags_fast(text, pred) == bieso_tags(
                 text, kbase.pairs_for(pred)
             ), (text[:10], pred)
+
+
+def test_dotted_capital_i_lowercases_like_str_lower():
+    """Presence lowercases with ``str.lower`` on every path. 'İ' (U+0130)
+    lowers to 'i̇' (two code points) under ``str.lower`` but to 'i'
+    under Arrow's utf8_lower; a batch path using the latter dropped
+    this pair to the fallback while ``classify`` fired it."""
+    kbase = KnowledgeBase([("rel00", "İstanbul", "Ankara")])
+    text = "İstanbul und Ankara"
+    assert kbase.entities_present(text) == {"i̇stanbul", "ankara"}
+    assert kbase.classify(text) == (["rel00"], [1.0])
+    assert kbase.classify_batch([text]) == ([["rel00"]], [[1.0]])
+    assert kbase.extract_batch([text]) == [[("rel00", ["İstanbul"], ["Ankara"])]]
+    assert reference_extract(text, kbase.by_predicate, {}) == [
+        ("İstanbul", "rel00", "Ankara", "", "")
+    ]
+
+
+def test_empty_string_entity_is_present_everywhere_but_tags_nothing():
+    kbase = KnowledgeBase([("p", "", "x"), ("q", "a", "a")])
+    assert kbase.entities_present("zz") == {""}
+    assert kbase.entities_present("") == {""}
+    preds, _ = kbase.classify_batch(["x", "", "a b"])
+    # ("", "x") fires on "x" alone; "" never fires anything by itself.
+    assert preds[0] == ["p"] and preds[2] == ["q"]
+    assert preds[1] == kbase.classify("")[0] == ["q", "p"]
+    assert kbase.extract_batch(["x", "", "aXa", "a a a"]) == [
+        [],
+        [],
+        [("q", ["a"], ["a"])],
+        [("q", ["a", "a"], ["a"])],
+    ]
+    assert kbase.bieso_tags_fast("x", "p") == bieso_tags("x", [("", "x")])
+
+
+def test_empty_knowledge_base():
+    kbase = KnowledgeBase([])
+    assert kbase.entities_present("anything") == set()
+    assert kbase.classify("anything") == ([], [])
+    assert kbase.classify_batch(["anything", ""]) == ([[], []], [[], []])
+    assert kbase.extract_batch(["anything", ""]) == [[], []]
+    assert kbase.bieso_tags_fast("ab", "p") == ["O", "O"]
+
+
+def test_batch_where_nothing_fires_takes_fallback_on_every_row():
+    entries = [
+        ("主演", "端脑", "朱元冰"),
+        ("作者", "碑", "维克多·谢阁兰"),
+        ("relx", "ab", "cd"),
+    ]
+    kbase = KnowledgeBase(entries)
+    by_pred: dict[str, list[tuple[str, str]]] = {}
+    for p, s, o in entries:
+        by_pred.setdefault(p, []).append((s, o))
+    texts = ["ab only", "only cd", "端脑 alone", "", "ab only"]
+    preds, scores = kbase.classify_batch(texts)
+    for i, text in enumerate(texts):
+        assert (preds[i], scores[i]) == classify_predicates(text, by_pred)
+        assert max(scores[i]) < 0.5 and len(preds[i]) == 3
+    # Fallback units are tagged too; one-sided matches yield no unit.
+    assert kbase.extract_batch(texts) == [[] for _ in texts]
+
+
+def test_batch_spanning_several_slices_matches_single_texts():
+    """The batch kernels probe a long batch slice by slice; results must
+    not depend on where a text falls."""
+    from information_extraction_spark.kernels.extraction import _SLICE_TEXTS
+
+    entries = [
+        ("主演", "端脑", "朱元冰"),
+        ("relx", "ab", "cd ef"),
+        ("rely", "cd", "ab"),
+    ]
+    kbase = KnowledgeBase(entries)
+    pieces = [DUANNAO_TEXT, "ab and cd ef", "CD then AB", "nothing", ""]
+    texts = [f"{pieces[i % 5]} {i}" for i in range(2 * _SLICE_TEXTS + 7)]
+    preds, scores = kbase.classify_batch(texts)
+    units = kbase.extract_batch(texts)
+    for i, text in enumerate(texts):
+        assert (preds[i], scores[i]) == kbase.classify(text)
+        assert units[i] == KnowledgeBase(entries).extract_batch([text])[0]

@@ -168,6 +168,57 @@ def test_extract_batch_matches_staged_kernels(kb_rows, texts):
         assert clean_units == expected_clean
 
 
+# --- Indexed KB vs the direct dict-KB kernels ------------------------------
+
+_MIXED = "abAB金木水火"
+
+
+@st.composite
+def _kb_and_texts(draw):
+    """A random KB over a small mixed-case alphabet whose entities
+    overlap and nest, and texts built from entity pieces and filler,
+    with a case-swapped copy, a duplicate and an empty text."""
+    pool = draw(st.lists(st.text(alphabet=_MIXED, min_size=1, max_size=6),
+                         min_size=1, max_size=6))
+    cuts = draw(st.lists(st.tuples(st.sampled_from(pool), st.integers(0, 5),
+                                   st.integers(1, 5)), max_size=4))
+    pool += [e[i : i + n] for e, i, n in cuts if e[i : i + n]]
+    ent = st.sampled_from(pool)
+    rows = draw(st.lists(st.tuples(_pred, ent, ent), min_size=1, max_size=10))
+    rows += [(p, e, e) for p, e in draw(st.lists(st.tuples(_pred, ent), max_size=3))]
+    piece = st.one_of(ent, st.text(alphabet=_MIXED + "、 xy", max_size=3))
+    texts = draw(st.lists(st.lists(piece, max_size=6).map("".join),
+                          min_size=1, max_size=5))
+    return rows, texts + [texts[0].swapcase(), texts[0], ""]
+
+
+@given(_kb_and_texts())
+@settings(max_examples=150, deadline=None)
+def test_indexed_kb_matches_direct_kernels(case):
+    """Per text, the batch kernels on the indexed KB equal the direct
+    dict-KB classify_predicates and reference_extract: overlapping and
+    nested entities, subject == object, entity lengths 1-6, duplicate
+    and empty texts."""
+    from information_extraction_spark.kernels.extraction import (
+        KnowledgeBase,
+        classify_predicates,
+        reference_extract,
+    )
+
+    rows, texts = case
+    by_pred: dict[str, list[tuple[str, str]]] = {}
+    for p, s, o in dict.fromkeys(rows):
+        by_pred.setdefault(p, []).append((s, o))
+    kb = KnowledgeBase(rows)
+    preds, scores = kb.classify_batch(texts)
+    units = kb.extract_batch(texts, min_entity_len=2)
+    for i, text in enumerate(texts):
+        assert (preds[i], scores[i]) == classify_predicates(text, by_pred)
+        got = {(s, p, o) for p, subs, objs in units[i] for s in subs for o in objs}
+        want = {(s, p, o) for s, p, o, _, _ in reference_extract(text, by_pred, {})}
+        assert got == want, text
+
+
 # --- Round-3 kernels: DP segmentation, media codecs, NN checkpoint ---------
 
 
